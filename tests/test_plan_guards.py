@@ -327,3 +327,39 @@ def test_no_cross_invocation_result_memo():
                             "with a justification; if it is a memo, remove it"
                         )
     assert not offenders, "\n".join(offenders)
+
+
+def test_streaming_commit_protocol_lives_in_commit_module():
+    """The exactly-once commit protocol (ledger guard, write-then-mark,
+    foreachBatch start) is written once, in streaming/commit.py.  No
+    other module in streaming/ may construct a Ledger or call
+    ``foreachBatch``, ``enqueue_whole_table``, ``pending_exists`` or
+    ``mark_complete`` — a sink that needs them goes through
+    ``commit.guarded`` / ``commit.start`` instead of restating them."""
+    import ast
+    from pathlib import Path
+
+    streaming = (
+        Path(__file__).resolve().parents[1]
+        / "vertica_hadoop_integration__spark"
+        / "streaming"
+    )
+    banned = {
+        "Ledger",
+        "foreachBatch",
+        "enqueue_whole_table",
+        "pending_exists",
+        "mark_complete",
+    }
+    offenders = []
+    for path in sorted(streaming.glob("*.py")):
+        if path.name == "commit.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            if name in banned:
+                offenders.append(f"streaming/{path.name}:{node.lineno} calls {name}")
+    assert not offenders, "\n".join(offenders)

@@ -139,3 +139,41 @@ class TestStreamFunnel:
             )
         )
         assert got == expected
+
+    def test_string_user_ids_match_batch_funnel(self, spark, tmp_path):
+        """User ids of any type: the first batch starts the frontier from
+        its own columns (no hand-typed empty state), so string ids give
+        the same report as funnel() over the union."""
+        schema = (
+            "event_id long, ts timestamp, user_id string, "
+            "event_type string, value double"
+        )
+        t = dt.datetime
+        b0 = spark.createDataFrame(
+            [
+                (1, t(2024, 4, 1, 9), "u-a", "view", 0.0),
+                (2, t(2024, 4, 1, 9), "u-b", "view", 0.0),
+                (3, t(2024, 4, 1, 10), "u-a", "click", 0.0),
+            ],
+            schema,
+        )
+        b1 = spark.createDataFrame(
+            [
+                (4, t(2024, 4, 2, 9), "u-b", "click", 0.0),
+                (5, t(2024, 4, 2, 10), "u-a", "purchase", 4.0),
+                (6, t(2024, 4, 2, 11), "u-c", "purchase", 1.0),
+            ],
+            schema,
+        )
+        rep = str(tmp_path / "rep")
+        sink = make_funnel_sink(rep, str(tmp_path / "led"))
+        sink(b0, 0)
+        sink(b1, 1)
+        got = _canon(read_report(spark, rep))
+        expected = _canon(
+            funnel(
+                b0.unionByName(b1), stages=("view", "click", "purchase")
+            )
+        )
+        assert got == expected
+        assert got == [(0, "view", 2), (1, "click", 2), (2, "purchase", 1)]

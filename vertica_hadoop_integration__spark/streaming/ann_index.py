@@ -24,9 +24,9 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ledger import Ledger
 from ..operators.similarity import assign_to_centroids, ivf_topk
 from ..sources.writers import write_atomic
+from .commit import guarded, start
 
 
 def stream_embedding_index_load(
@@ -45,28 +45,20 @@ def stream_embedding_index_load(
     table (centroid_id, centroid_vec) — write it once with
     bootstrap_centroids."""
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed batch, already applied
         cents = spark.read.parquet(centroids_dir)
         assigned = assign_to_centroids(batch_df, cents, id_col, vec_col)
         write_atomic(
             assigned,
-            os.path.join(deltas_dir, f"batch={key}"),
+            os.path.join(deltas_dir, f"batch={batch_id}"),
             output_format="parquet",
         )
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
-    writer = vectors.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(
+        vectors, guarded(table_name, ledger_path, _commit),
+        checkpoint_dir, trigger_available_now,
+    )
 
 
 def bootstrap_centroids(

@@ -8,27 +8,15 @@ Per batch, three bounded artifacts move:
 * **touch-state snapshots** (``{report_dir}__touch/<batch_id>``: user_id,
   t_ts, t_ty, t_id) — each user's latest non-conversion event as of the
   END of that batch, the carry-in that lets a conversion at the start of
-  batch N credit a touch from batch N-1.  State is written as one
-  atomic snapshot PER BATCH ID and batch N always resolves its carry-in
-  from the newest snapshot with id < N, so a crash between the state
-  write and the ledger commit cannot poison a replay: the replayed
-  batch re-reads the same pre-batch snapshot it read the first time and
-  simply overwrites its own orphan (r09 ADVICE — previously state
-  advanced in place before the ledger mark, and a replay attributed
-  against state that already contained the batch's own later touches).
-  Snapshots older than the last committed batch are pruned after the
-  ledger mark, so live storage is ~2 snapshots, each bounded by
-  distinct users ever seen (one timestamp + type + event id per user).
+  batch N credit a touch from batch N-1.  Live storage is ~2 snapshots,
+  each bounded by distinct users ever seen (one timestamp + type + event
+  id per user).
 * **per-batch report delta** (``{report_dir}/deltas/<batch_id>``) — the
   batch's conversions attributed against (in-batch prior touch) merged
   with (carried snapshot touch), aggregated to (attributed_type,
-  n_conversions, DECIMAL value sum).  Deltas are keyed by batch id and
-  written atomically, so a replayed batch overwrites its own delta
-  instead of double-counting — exactly-once effective without
-  rewriting history.
+  n_conversions, DECIMAL value sum).
 * **the serving report** (``{report_dir}/report``) — the summed deltas,
-  re-aggregated and atomically swapped each batch (types-cardinality
-  rows; recompute-from-deltas makes a crash replay self-healing).
+  re-aggregated each batch (types-cardinality rows).
 
 Ordering contract: attribution is exact for in-order arrival (a touch
 never lands in a LATER batch than a conversion it should credit —
@@ -47,33 +35,32 @@ a no-op for in-order data, and the guard that a corrupted or
 adversarial state row can never credit a touch that happened after
 the conversion.
 
-Parity: the final report over any in-order batch split equals the
-batch operator over the union (tests/test_stream_attribution.py),
-including the NULL (organic) row; replayed batch ids are skipped via
-the ledger, and a crash replayed from ANY point between the delta
-write and the ledger mark converges to the same report
-(test_crash_between_state_and_ledger_replays_clean).
+Replay and pruning follow streaming/commit.py.  Parity: the final report
+over any in-order batch split equals the batch operator over the union
+(tests/test_stream_attribution.py), including the NULL (organic) row.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ledger import Ledger
-from ..sources.writers import write_atomic
+from .commit import (
+    commit_delta,
+    deltas_dir_for,
+    guarded,
+    latest_snapshot,
+    read_report,  # noqa: F401 - (attributed_type, n_conversions, total_value)
+    start,
+    write_report,
+    write_snapshot,
+)
 
 
 def touch_dir_for(report_dir: str) -> str:
     return report_dir.rstrip("/") + "__touch"
-
-
-def read_report(spark, report_dir: str) -> DataFrame:
-    """The serving report: (attributed_type, n_conversions, total_value)."""
-    return spark.read.parquet(report_dir.rstrip("/") + "/report")
 
 
 _LEGACY_TID_SENTINEL = -(2**63)  # Long.MIN: loses every (ts, id) tie
@@ -83,7 +70,7 @@ def _migrate_legacy_state(spark, touch_dir: str) -> None:
     """One-shot upgrade of pre-r10 in-place touch state (r10 ADVICE):
     the r10 snapshot-per-batch rework left a pre-existing deployment's
     parquet files sitting DIRECTLY under ``touch_dir`` (and without the
-    ``t_id`` column), where ``_latest_snapshot``'s digit-only listing
+    ``t_id`` column), where ``latest_snapshot``'s digit-only listing
     ignores them — so the first post-upgrade batch would silently treat
     every user as having no carried touch and attribute straddling
     conversions NULL/organic.
@@ -119,9 +106,7 @@ def _migrate_legacy_state(spark, touch_dir: str) -> None:
             F.lit(_LEGACY_TID_SENTINEL).cast("long").alias("t_id")
         )
     cols.append(F.col("t_ty"))
-    write_atomic(
-        old.select(*cols), f"{touch_dir}/0", output_format="parquet"
-    )
+    write_snapshot(old.select(*cols), touch_dir, 0)
     for e in legacy:
         try:
             os.remove(os.path.join(touch_dir, e))
@@ -134,24 +119,6 @@ def _migrate_legacy_state(spark, touch_dir: str) -> None:
                 os.remove(p)
             except OSError:
                 pass
-
-
-def _latest_snapshot(spark, touch_dir: str, before_batch_id: int):
-    """The newest committed touch-state snapshot with id < the current
-    batch id, or None.  Committed snapshots are enumerated by EXACT
-    digit name (a glob would also match write_atomic staging leftovers);
-    the strict < bound is the replay guard — a replayed batch never
-    sees its own first-attempt snapshot."""
-    try:
-        ids = [
-            int(d) for d in os.listdir(touch_dir)
-            if d.isdigit() and int(d) < before_batch_id
-        ]
-    except FileNotFoundError:
-        return None
-    if not ids:
-        return None
-    return spark.read.parquet(f"{touch_dir}/{max(ids)}")
 
 
 def make_attribution_sink(
@@ -170,18 +137,12 @@ def make_attribution_sink(
     and interrupt between the artifact writes exactly where a real
     crash would."""
     touch_dir = touch_dir_for(report_dir)
-    report_path = report_dir.rstrip("/") + "/report"
     win_us = window_days * 86400 * 1_000_000
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = f"attribution#{batch_id}"
-        ledger.enqueue_whole_table(key, "stream", 1)
-        if not ledger.pending_exists(key):
-            return  # replayed batch, already applied
         _migrate_legacy_state(spark, touch_dir)
-        state = _latest_snapshot(spark, touch_dir, batch_id)
+        state = latest_snapshot(spark, touch_dir, batch_id)
         # in-batch prior touch per row (the batch operator's window)
         w = (
             Window.partitionBy(user_col)
@@ -259,33 +220,13 @@ def make_attribution_sink(
             F.count(F.lit(1)).cast("bigint").alias("n_conversions"),
             F.sum(F.col(value_col).cast("decimal(38,6)")).alias("_v"),
         )
-        deltas_root = f"{report_dir.rstrip('/')}/deltas"
-        os.makedirs(deltas_root, exist_ok=True)
-        write_atomic(
-            delta, f"{deltas_root}/{batch_id}", output_format="parquet"
-        )
-        # refresh the serving report from ALL deltas (self-healing: a
-        # replay overwrites its delta, the re-sum converges).  Committed
-        # delta dirs are enumerated by EXACT name — a glob would also
-        # match a crashed write_atomic's ``<id>.inprogress-*`` /
-        # ``<id>.replaced-*`` staging leftovers and double-count.  The
-        # listing is driver-side but bounded by batch count, the same
-        # cardinality the ledger already tracks.
-        committed = sorted(
-            f"{deltas_root}/{d}"
-            for d in os.listdir(deltas_root)
-            if d.isdigit()
-        )
-        all_deltas = spark.read.parquet(*committed)
+        all_deltas = commit_delta(spark, report_dir, batch_id, delta)
         report = all_deltas.groupBy("attributed_type").agg(
             F.sum("n_conversions").cast("bigint").alias("n_conversions"),
             F.sum("_v").cast("double").alias("total_value"),
         )
-        write_atomic(report, report_path, output_format="parquet")
-        # advance the touch state: per-user latest non-conversion touch,
-        # written as THIS batch's snapshot (never in place — replays of
-        # later batches resolve strictly-earlier snapshots, see
-        # _latest_snapshot)
+        write_report(report, report_dir)
+        # advance the touch state: per-user latest non-conversion touch
         batch_touch = (
             batch_df.filter(F.col(type_col) != conversion_type)
             .groupBy(F.col(user_col).alias("user_id"))
@@ -315,17 +256,12 @@ def make_attribution_sink(
             )
         else:
             merged = batch_touch
-        os.makedirs(touch_dir, exist_ok=True)
-        write_atomic(merged, f"{touch_dir}/{batch_id}", output_format="parquet")
-        ledger.mark_complete(key, None)
-        # prune snapshots this batch's commit made unreachable: every
-        # LATER batch resolves a snapshot id >= this one, and a replay
-        # of THIS batch is ledger-skipped, so ids < batch_id are dead
-        for d in os.listdir(touch_dir):
-            if d.isdigit() and int(d) < batch_id:
-                shutil.rmtree(f"{touch_dir}/{d}", ignore_errors=True)
+        write_snapshot(merged, touch_dir, batch_id)
 
-    return _sink
+    return guarded(
+        "attribution", ledger_path, _commit,
+        state_dir=touch_dir, deltas_dir=deltas_dir_for(report_dir),
+    )
 
 
 def stream_attribution(
@@ -356,9 +292,4 @@ def stream_attribution(
         value_col=value_col,
         id_col=id_col,
     )
-    writer = events.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(events, _sink, checkpoint_dir, trigger_available_now)

@@ -30,9 +30,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
-from ..ledger import Ledger
 from ..operators.relational import cdc_apply
 from ..sources.writers import write_atomic
+from .commit import guarded, start
 
 
 def frontier_dir_for(base_dir: str) -> str:
@@ -55,13 +55,8 @@ def stream_cdc_apply(
     base schema = changelog minus op/seq columns)."""
     frontier_dir = frontier_dir_for(base_dir)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed batch, already applied
         base = spark.read.parquet(base_dir)
         try:
             frontier = spark.read.parquet(frontier_dir)
@@ -99,11 +94,8 @@ def stream_cdc_apply(
         else:
             new_frontier = batch_max
         write_atomic(new_frontier, frontier_dir, output_format="parquet")
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
-    writer = changes.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(
+        changes, guarded(table_name, ledger_path, _commit),
+        checkpoint_dir, trigger_available_now,
+    )

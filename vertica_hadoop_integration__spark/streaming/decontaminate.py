@@ -19,9 +19,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..ledger import Ledger
 from ..operators.corpus import decontaminate
 from ..sources.writers import write_atomic
+from .commit import guarded, start
 
 
 def stream_decontaminate_load(
@@ -48,24 +48,15 @@ def stream_decontaminate_load(
     double-writes a batch directory."""
     import os
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed batch, already landed
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
         clean = decontaminate(
             batch_df, eval_shingles,
             text_col=text_col, id_col=id_col,
             shingle_n=shingle_n, mode="drop",
         )
-        write_atomic(clean, os.path.join(dest_dir, f"batch={key}"))
-        ledger.mark_complete(f"{table_name}#{key}", None)
+        write_atomic(clean, os.path.join(dest_dir, f"batch={batch_id}"))
 
-    writer = docs.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(
+        docs, guarded(table_name, ledger_path, _commit),
+        checkpoint_dir, trigger_available_now,
+    )

@@ -23,9 +23,9 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ledger import Ledger
 from ..operators.dedup import minhash_dedup, minhash_index, minhash_probe
 from ..sources.writers import write_atomic
+from .commit import guarded, start
 
 
 def _self_dedup(
@@ -85,13 +85,8 @@ def stream_dedup_load(
     bands_path = os.path.join(index_dir, "bands")
     verify_path = os.path.join(index_dir, "verify")
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed batch, already landed
         clean = _self_dedup(
             batch_df, text_col, id_col, num_hashes, bands, min_jaccard
         )
@@ -114,21 +109,18 @@ def stream_dedup_load(
         # docs can evaporate between plan reuses (lazy recompute), so pin
         # the clean set before writing it to BOTH the output and the index
         clean = clean.localCheckpoint()
-        write_atomic(clean, os.path.join(dest_dir, f"batch={key}"))
+        write_atomic(clean, os.path.join(dest_dir, f"batch={batch_id}"))
         new_bands, new_verify = minhash_index(
             clean, text_col=text_col, id_col=id_col,
             num_hashes=num_hashes, bands=bands,
         )
         new_bands.write.mode("append").parquet(bands_path)
         new_verify.write.mode("append").parquet(verify_path)
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
-    writer = docs.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(
+        docs, guarded(table_name, ledger_path, _commit),
+        checkpoint_dir, trigger_available_now,
+    )
 
 
 def stream_chunk_dedup_load(
@@ -170,13 +162,8 @@ def stream_chunk_dedup_load(
         raise ValueError(f"unknown chunker: {chunker!r}")
     hash_path = os.path.join(index_dir, "chunk_hashes")
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed batch, already landed
         if chunker == "cdc":
             chunks = cdc_chunks(
                 batch_df,
@@ -204,15 +191,12 @@ def stream_chunk_dedup_load(
             kept = kept.join(seen, kept._h == seen.chunk_hash, "left_anti")
         kept = kept.localCheckpoint()  # pin: lands in output AND index
         out = reassemble_chunks(kept, id_col=id_col)
-        write_atomic(out, os.path.join(dest_dir, f"batch={key}"))
+        write_atomic(out, os.path.join(dest_dir, f"batch={batch_id}"))
         kept.select(F.col("_h").alias("chunk_hash")).write.mode(
             "append"
         ).parquet(hash_path)
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
-    writer = docs.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(
+        docs, guarded(table_name, ledger_path, _commit),
+        checkpoint_dir, trigger_available_now,
+    )

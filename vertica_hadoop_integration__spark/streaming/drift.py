@@ -23,8 +23,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ledger import Ledger
 from ..sources.writers import write_atomic
+from .commit import guarded, start
 
 
 def _bin_expr(cuts: list[float], col: str):
@@ -135,13 +135,8 @@ def stream_drift_monitor(
     model = freeze_reference(reference, col, num_bins)
     bin_expr = _bin_expr(model["cuts"], col)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed batch, already applied
         rows = (
             batch_df.select(bin_expr)
             .groupBy("bin")
@@ -172,16 +167,15 @@ def stream_drift_monitor(
             "ks double, ks_alarm boolean",
         )
         write_atomic(
-            out, os.path.join(out_dir, f"batch={key}"), output_format="parquet"
+            out,
+            os.path.join(out_dir, f"batch={batch_id}"),
+            output_format="parquet",
         )
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
-    writer = values.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(
+        values, guarded(table_name, ledger_path, _commit),
+        checkpoint_dir, trigger_available_now,
+    )
 
 
 def freeze_reference_by_group(
@@ -280,13 +274,8 @@ def stream_drift_monitor_by_group(
         )
     )
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed batch, already applied
         binned = (
             batch_df.join(cut_table, on=group_col, how="left")
             .select(
@@ -342,13 +331,12 @@ def stream_drift_monitor_by_group(
             "psi double, alarm boolean, ks double, ks_alarm boolean",
         )
         write_atomic(
-            out, os.path.join(out_dir, f"batch={key}"), output_format="parquet"
+            out,
+            os.path.join(out_dir, f"batch={batch_id}"),
+            output_format="parquet",
         )
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
-    writer = values.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(
+        values, guarded(table_name, ledger_path, _commit),
+        checkpoint_dir, trigger_available_now,
+    )

@@ -17,59 +17,40 @@ the delta-dir pattern deliberately — per batch, two artifacts move:
   cascade over (carried state + batch events).  Stage k qualifies
   at-or-after the user's CURRENT t_{k-1} — including a t_{k-1} set
   earlier in the same batch, so a user can traverse several stages in
-  one batch exactly as in the batch plan.  Snapshot-per-batch-id with
-  strictly-earlier resolution (the r10 replay contract).
+  one batch exactly as in the batch plan.
 * **the serving report** (``{report_dir}/report``) — (stage_idx, stage,
-  n_users) aggregated from the POST-MERGE snapshot and atomically
-  swapped.  Deriving the report from the committed state (rather than
-  summed deltas) is what makes replay exactly-once here: a replayed
-  batch re-reads the same pre-batch snapshot, recomputes the same
-  merged state, and re-publishes the identical report — there is no
-  additive artifact to double-count.
+  n_users) aggregated from the POST-MERGE snapshot.  Deriving the report
+  from the committed state (rather than summed deltas) leaves no
+  additive artifact a replay could double-count.
 
 Ordering contract: exact for in-order arrival (the family contract).
 An out-of-order stage-(k-1) event that would retro-lower t_{k-1} —
 and thereby qualify an already-seen stage-k event — requires a batch
 rebuild, as with every sink in this family.
 
-Parity: the final report over any in-order batch split equals
-funnel() over the union, including users whose stage progression
-straddles batch boundaries (tests/test_stream_funnel.py), and a crash
-replayed from between the state write and the ledger mark converges.
+Replay and pruning follow streaming/commit.py.  Parity: the final report
+over any in-order batch split equals funnel() over the union, including
+users whose stage progression straddles batch boundaries
+(tests/test_stream_funnel.py).
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ledger import Ledger
-from ..sources.writers import write_atomic
+from .commit import (
+    guarded,
+    latest_snapshot,
+    read_report,  # noqa: F401 - (stage_idx, stage, n_users)
+    start,
+    write_report,
+    write_snapshot,
+)
 
 
 def stage_dir_for(report_dir: str) -> str:
     return report_dir.rstrip("/") + "__stage"
-
-
-def read_report(spark, report_dir: str) -> DataFrame:
-    """(stage_idx, stage, n_users)."""
-    return spark.read.parquet(report_dir.rstrip("/") + "/report")
-
-
-def _latest_snapshot(spark, state_dir: str, before_batch_id: int):
-    try:
-        ids = [
-            int(d) for d in os.listdir(state_dir)
-            if d.isdigit() and int(d) < before_batch_id
-        ]
-    except FileNotFoundError:
-        return None
-    if not ids:
-        return None
-    return spark.read.parquet(f"{state_dir}/{max(ids)}")
 
 
 def make_funnel_sink(
@@ -83,27 +64,14 @@ def make_funnel_sink(
     """The foreachBatch sink as a standalone callable (testable without
     a running stream, like make_transition_sink)."""
     state_dir = stage_dir_for(report_dir)
-    report_path = report_dir.rstrip("/") + "/report"
     tcols = [f"t_{i}" for i in range(len(stages))]
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = f"funnel#{batch_id}"
-        ledger.enqueue_whole_table(key, "stream", 1)
-        if not ledger.pending_exists(key):
-            return  # replayed batch, already applied
-        state = _latest_snapshot(spark, state_dir, batch_id)
-        if state is None:
-            state = spark.createDataFrame(
-                [],
-                "user_id long, "
-                + ", ".join(f"{c} timestamp" for c in tcols),
-            )
         # the batch operator's cascade over (carried frontier + batch):
         # stage 0's frontier is min batch ts merged with the carry;
         # stage k's candidates must be >= the user's UPDATED t_{k-1}
-        merged = state
+        merged = latest_snapshot(spark, state_dir, batch_id)
         for i, s in enumerate(stages):
             ev = batch_df.filter(F.col(type_col) == s).select(
                 F.col(user_col).alias("user_id"),
@@ -121,6 +89,16 @@ def make_funnel_sink(
                     .groupBy("user_id")
                     .agg(F.min("_t").alias("_new"))
                 )
+            if merged is None:
+                # no carried frontier: stage 0's candidates start it,
+                # typed by the batch itself (user ids of any type)
+                unset = F.lit(None).cast(batch_df.schema[ts_col].dataType)
+                merged = cand.select(
+                    "user_id",
+                    F.col("_new").alias("t_0"),
+                    *[unset.alias(c) for c in tcols[1:]],
+                )
+                continue
             # F.least skips NULLs, so a carried t_i merges with a new
             # candidate and a NULL-vs-value pair resolves to the value
             merged = (
@@ -134,10 +112,7 @@ def make_funnel_sink(
                     *[F.col(c) for c in tcols[i + 1:]],
                 )
             )
-        os.makedirs(state_dir, exist_ok=True)
-        write_atomic(
-            merged, f"{state_dir}/{batch_id}", output_format="parquet"
-        )
+        write_snapshot(merged, state_dir, batch_id)
         # count from the COMMITTED snapshot (not the lazy lineage): the
         # report provably derives from the state a replay would re-read
         snap = spark.read.parquet(f"{state_dir}/{batch_id}")
@@ -154,13 +129,9 @@ def make_funnel_sink(
             ],
             "stage_idx int, stage string, n_users bigint",
         )
-        write_atomic(report, report_path, output_format="parquet")
-        ledger.mark_complete(key, None)
-        for d in os.listdir(state_dir):
-            if d.isdigit() and int(d) < batch_id:
-                shutil.rmtree(f"{state_dir}/{d}", ignore_errors=True)
+        write_report(report, report_dir)
 
-    return _sink
+    return guarded("funnel", ledger_path, _commit, state_dir=state_dir)
 
 
 def stream_funnel(
@@ -183,9 +154,4 @@ def stream_funnel(
         type_col=type_col,
         ts_col=ts_col,
     )
-    writer = events.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(events, _sink, checkpoint_dir, trigger_available_now)

@@ -25,9 +25,9 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ledger import Ledger
 from ..operators.text import inverted_index
 from ..sources.writers import write_atomic
+from .commit import guarded, start
 
 
 def stream_index_load(
@@ -43,27 +43,18 @@ def stream_index_load(
     """Start the index-maintaining ingest stream; returns the
     StreamingQuery. Deltas land under ``deltas_dir/batch=<id>``."""
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed batch, already applied
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
         delta = inverted_index(batch_df, text_col, id_col)
         write_atomic(
             delta,
-            os.path.join(deltas_dir, f"batch={key}"),
+            os.path.join(deltas_dir, f"batch={batch_id}"),
             output_format="parquet",
         )
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
-    writer = docs.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(
+        docs, guarded(table_name, ledger_path, _commit),
+        checkpoint_dir, trigger_available_now,
+    )
 
 
 def read_index(spark, deltas_dir: str) -> DataFrame:

@@ -17,8 +17,8 @@ import shutil
 
 from pyspark.sql import DataFrame
 
-from ..ledger import Ledger
 from ..sources.writers import write_atomic
+from .commit import guarded, start
 
 
 def stream_load(
@@ -39,25 +39,16 @@ def stream_load(
     write-then-flip ordering as the batch pipeline (exactly-once to an
     idempotent sink). Returns the StreamingQuery."""
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed, already complete
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
         write_atomic(
-            batch_df, os.path.join(dest_dir, f"batch={key}"),
+            batch_df, os.path.join(dest_dir, f"batch={batch_id}"),
             output_format=output_format,
         )
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
-    writer = events.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(
+        events, guarded(table_name, ledger_path, _commit),
+        checkpoint_dir, trigger_available_now,
+    )
 
 
 def stream_partitioned_load(
@@ -86,20 +77,13 @@ def stream_partitioned_load(
     StreamingQuery."""
     import uuid as _uuid
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed, already complete
-        dest = os.path.join(dest_dir, f"batch={key}")
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
+        dest = os.path.join(dest_dir, f"batch={batch_id}")
         if os.path.exists(dest):
-            # Crash window: the rename landed but mark_complete did not.
+            # Crash window: the rename landed but the ledger mark did not.
             # The batch directory is complete (os.replace is atomic), so
             # the replay must only finish the bookkeeping — re-writing
             # would raise ENOTEMPTY on the replace and wedge the stream.
-            ledger.mark_complete(f"{table_name}#{key}", None)
             return
         tmp = os.path.join(dest_dir, f".inprogress-{_uuid.uuid4().hex[:8]}")
         try:
@@ -112,11 +96,8 @@ def stream_partitioned_load(
         finally:
             if os.path.exists(tmp):
                 shutil.rmtree(tmp, ignore_errors=True)
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
-    writer = events.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(
+        events, guarded(table_name, ledger_path, _commit),
+        checkpoint_dir, trigger_available_now,
+    )

@@ -11,20 +11,15 @@ Per batch, three bounded artifacts move:
 * **seen-pair state snapshots** (``{report_dir}__seen/<batch_id>``:
   user_id, cohort_start, period_start) — every (user, activity period)
   already counted, carrying the user's fixed first-event cohort.
-  Snapshot-per-batch-id with strictly-earlier resolution (the
-  attribution/transition r10 replay contract): a replayed batch re-reads
-  the same pre-batch state it read the first time.  Bounded by distinct
-  (user, period) — exactly the cardinality the batch operator's
-  ``active`` frame materializes.
+  Bounded by distinct (user, period) — exactly the cardinality the batch
+  operator's ``active`` frame materializes.
 * **per-batch retention delta** (``{report_dir}/deltas/<batch_id>``) —
   (cohort_start, period_offset, n_users) counting only the (user,
   period) pairs FIRST OBSERVED in this batch (anti-join against the
   carried seen-set), so a user active in one period across many batches
-  is counted exactly once.  Keyed by batch id, written atomically: a
-  replay overwrites its own delta, never double-counts.
+  is counted exactly once.
 * **the serving report** (``{report_dir}/report``) — summed deltas on
-  the tiny (cohort, offset) key, atomically swapped; recompute-from-
-  deltas makes a crash replay self-healing.
+  the tiny (cohort, offset) key.
 
 Ordering contract: exact for in-order arrival (time-ordered micro-batch
 files — the attribution/transition contract): a user's first-ever event
@@ -33,44 +28,30 @@ first time the user is seen and never retro-shifts.  Out-of-order
 cohort corrections require a batch rebuild, as with every sink in this
 family.
 
-Parity: the final report over any in-order batch split equals
-retention_cohorts over the union (tests/test_stream_retention.py),
-and a crash replayed from between the state write and the ledger mark
-converges to the same report.
+Replay and pruning follow streaming/commit.py.  Parity: the final report
+over any in-order batch split equals retention_cohorts over the union
+(tests/test_stream_retention.py).
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ledger import Ledger
-from ..sources.writers import write_atomic
+from .commit import (
+    commit_delta,
+    deltas_dir_for,
+    guarded,
+    latest_snapshot,
+    read_report,  # noqa: F401 - (cohort_start, period_offset, n_users)
+    start,
+    write_report,
+    write_snapshot,
+)
 
 
 def seen_dir_for(report_dir: str) -> str:
     return report_dir.rstrip("/") + "__seen"
-
-
-def read_report(spark, report_dir: str) -> DataFrame:
-    """(cohort_start, period_offset, n_users)."""
-    return spark.read.parquet(report_dir.rstrip("/") + "/report")
-
-
-def _latest_snapshot(spark, state_dir: str, before_batch_id: int):
-    try:
-        ids = [
-            int(d) for d in os.listdir(state_dir)
-            if d.isdigit() and int(d) < before_batch_id
-        ]
-    except FileNotFoundError:
-        return None
-    if not ids:
-        return None
-    return spark.read.parquet(f"{state_dir}/{max(ids)}")
 
 
 def make_retention_sink(
@@ -83,17 +64,11 @@ def make_retention_sink(
     """The foreachBatch sink as a standalone callable (testable without
     a running stream, like make_transition_sink)."""
     state_dir = seen_dir_for(report_dir)
-    report_path = report_dir.rstrip("/") + "/report"
     per = {"week": 7, "day": 1}[granularity]
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = f"retention#{batch_id}"
-        ledger.enqueue_whole_table(key, "stream", 1)
-        if not ledger.pending_exists(key):
-            return  # replayed batch, already applied
-        state = _latest_snapshot(spark, state_dir, batch_id)
+        state = latest_snapshot(spark, state_dir, batch_id)
         pairs = (
             batch_df.select(
                 F.col(user_col).alias("user_id"),
@@ -145,22 +120,12 @@ def make_retention_sink(
             .groupBy("cohort_start", "period_offset")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_users"))
         )
-        deltas_root = f"{report_dir.rstrip('/')}/deltas"
-        os.makedirs(deltas_root, exist_ok=True)
-        write_atomic(
-            delta, f"{deltas_root}/{batch_id}", output_format="parquet"
-        )
-        committed = sorted(
-            f"{deltas_root}/{d}"
-            for d in os.listdir(deltas_root)
-            if d.isdigit()
-        )
         report = (
-            spark.read.parquet(*committed)
+            commit_delta(spark, report_dir, batch_id, delta)
             .groupBy("cohort_start", "period_offset")
             .agg(F.sum("n_users").cast("bigint").alias("n_users"))
         )
-        write_atomic(report, report_path, output_format="parquet")
+        write_report(report, report_dir)
         # advance the seen-set: carried pairs plus this batch's new ones
         advanced = stamped.select(
             "user_id", "cohort_start", "period_start"
@@ -169,16 +134,12 @@ def make_retention_sink(
             advanced = state.select(
                 "user_id", "cohort_start", "period_start"
             ).unionByName(advanced)
-        os.makedirs(state_dir, exist_ok=True)
-        write_atomic(
-            advanced, f"{state_dir}/{batch_id}", output_format="parquet"
-        )
-        ledger.mark_complete(key, None)
-        for d in os.listdir(state_dir):
-            if d.isdigit() and int(d) < batch_id:
-                shutil.rmtree(f"{state_dir}/{d}", ignore_errors=True)
+        write_snapshot(advanced, state_dir, batch_id)
 
-    return _sink
+    return guarded(
+        "retention", ledger_path, _commit,
+        state_dir=state_dir, deltas_dir=deltas_dir_for(report_dir),
+    )
 
 
 def stream_retention(
@@ -200,9 +161,4 @@ def stream_retention(
         ts_col=ts_col,
         granularity=granularity,
     )
-    writer = events.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(events, _sink, checkpoint_dir, trigger_available_now)

@@ -19,9 +19,9 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ledger import Ledger
 from ..operators.temporal import refresh_rollup
 from ..sources.writers import write_atomic
+from .commit import guarded, start
 
 
 def stream_rollup_refresh(
@@ -43,16 +43,11 @@ def stream_rollup_refresh(
     scans; a dashboard reads it between batches and always sees whole
     committed partitions."""
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed batch, already applied
         write_atomic(
             batch_df,
-            os.path.join(raw_dir, f"batch={key}"),
+            os.path.join(raw_dir, f"batch={batch_id}"),
             output_format="parquet",
         )
         days = [
@@ -69,11 +64,8 @@ def stream_rollup_refresh(
             ts_col=ts_col, key_cols=key_cols, value_col=value_col,
             granularities=granularities,
         )
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
-    writer = events.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(
+        events, guarded(table_name, ledger_path, _commit),
+        checkpoint_dir, trigger_available_now,
+    )

@@ -13,21 +13,14 @@ Per batch, three bounded artifacts move:
   last event of batch N-1 → first event of batch N) is recovered by
   unioning the carried state rows into the new batch
   before the sequence window, so NO transition is lost to batching.
-  Snapshot-per-batch-id with strictly-earlier resolution makes crash
-  replays read the same pre-batch state as the first attempt
-  (streaming/attribution.py's r10 replay contract); committed batches
-  prune older snapshots, so live storage is ~2 snapshots bounded by
-  distinct users.
+  Live storage is ~2 snapshots bounded by distinct users.
 * **per-batch transition delta** (``{report_dir}/deltas/<batch_id>``) —
   (from_type, to_type, n) for exactly the transitions this batch
   CREATED: in-batch consecutive pairs plus the boundary pair per
-  carried user.  Bounded by |event types|^2 rows.  Keyed by batch id,
-  written atomically: a replay overwrites its own delta, never
-  double-counts.
+  carried user.  Bounded by |event types|^2 rows.
 * **the serving report** (``{report_dir}/report``) — summed deltas
-  re-normalized to (from_type, to_type, n_transitions, p_transition)
-  and atomically swapped.  The normalizing window runs over the
-  types^2-bounded matrix only.
+  re-normalized to (from_type, to_type, n_transitions, p_transition).
+  The normalizing window runs over the types^2-bounded matrix only.
 
 Ordering contract: exact for in-order arrival (time-ordered
 micro-batch files), the streaming-attribution contract; within a batch
@@ -35,44 +28,30 @@ order is restored by the (ts, event_id) window, and the carried state
 row competes by (ts, event_id) so a batch boundary never changes which
 event precedes which.
 
-Parity: the final report over any in-order batch split equals
-markov_transitions over the union (tests/test_stream_transition.py),
-and a crash replayed from between the state write and the ledger mark
-converges to the same report.
+Replay and pruning follow streaming/commit.py.  Parity: the final report
+over any in-order batch split equals markov_transitions over the union
+(tests/test_stream_transition.py).
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ledger import Ledger
-from ..sources.writers import write_atomic
+from .commit import (
+    commit_delta,
+    deltas_dir_for,
+    guarded,
+    latest_snapshot,
+    read_report,  # noqa: F401 - (from_type, to_type, n_transitions, p_transition)
+    start,
+    write_report,
+    write_snapshot,
+)
 
 
 def last_dir_for(report_dir: str) -> str:
     return report_dir.rstrip("/") + "__last"
-
-
-def read_report(spark, report_dir: str) -> DataFrame:
-    """(from_type, to_type, n_transitions, p_transition)."""
-    return spark.read.parquet(report_dir.rstrip("/") + "/report")
-
-
-def _latest_snapshot(spark, state_dir: str, before_batch_id: int):
-    try:
-        ids = [
-            int(d) for d in os.listdir(state_dir)
-            if d.isdigit() and int(d) < before_batch_id
-        ]
-    except FileNotFoundError:
-        return None
-    if not ids:
-        return None
-    return spark.read.parquet(f"{state_dir}/{max(ids)}")
 
 
 def make_transition_sink(
@@ -86,16 +65,10 @@ def make_transition_sink(
     """The foreachBatch sink as a standalone callable (testable without
     a running stream, like make_attribution_sink)."""
     state_dir = last_dir_for(report_dir)
-    report_path = report_dir.rstrip("/") + "/report"
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = f"transition#{batch_id}"
-        ledger.enqueue_whole_table(key, "stream", 1)
-        if not ledger.pending_exists(key):
-            return  # replayed batch, already applied
-        state = _latest_snapshot(spark, state_dir, batch_id)
+        state = latest_snapshot(spark, state_dir, batch_id)
         rows = batch_df.select(
             F.col(user_col).alias("_u"),
             F.col(ts_col).alias("_t"),
@@ -128,16 +101,8 @@ def make_transition_sink(
             .groupBy("from_type", "to_type")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
         )
-        deltas_root = f"{report_dir.rstrip('/')}/deltas"
-        os.makedirs(deltas_root, exist_ok=True)
-        write_atomic(delta, f"{deltas_root}/{batch_id}", output_format="parquet")
-        committed = sorted(
-            f"{deltas_root}/{d}"
-            for d in os.listdir(deltas_root)
-            if d.isdigit()
-        )
         counts = (
-            spark.read.parquet(*committed)
+            commit_delta(spark, report_dir, batch_id, delta)
             .groupBy("from_type", "to_type")
             .agg(F.sum("n").cast("bigint").alias("n_transitions"))
         )
@@ -151,7 +116,7 @@ def make_transition_sink(
                 / F.sum("n_transitions").over(w_from).cast("double")
             ).alias("p_transition"),
         )
-        write_atomic(report, report_path, output_format="parquet")
+        write_report(report, report_dir)
         # advance state: per-user latest event across carry + batch
         batch_last = (
             rows.groupBy(F.col("_u").alias("user_id"))
@@ -181,14 +146,12 @@ def make_transition_sink(
             )
         else:
             merged = batch_last
-        os.makedirs(state_dir, exist_ok=True)
-        write_atomic(merged, f"{state_dir}/{batch_id}", output_format="parquet")
-        ledger.mark_complete(key, None)
-        for d in os.listdir(state_dir):
-            if d.isdigit() and int(d) < batch_id:
-                shutil.rmtree(f"{state_dir}/{d}", ignore_errors=True)
+        write_snapshot(merged, state_dir, batch_id)
 
-    return _sink
+    return guarded(
+        "transition", ledger_path, _commit,
+        state_dir=state_dir, deltas_dir=deltas_dir_for(report_dir),
+    )
 
 
 def stream_transition_matrix(
@@ -212,9 +175,4 @@ def stream_transition_matrix(
         ts_col=ts_col,
         id_col=id_col,
     )
-    writer = events.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(events, _sink, checkpoint_dir, trigger_available_now)

@@ -27,8 +27,8 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ledger import Ledger
 from ..sources.writers import write_atomic
+from .commit import guarded, start
 
 
 def window_counts(
@@ -80,17 +80,12 @@ def stream_trending_load(
     StreamingQuery. ``trending_dir`` is partitioned by window_start day
     (``part_day``) so readers and the per-batch overwrite both prune."""
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed batch, already applied
         delta = window_counts(batch_df, window=window, ts_col=ts_col)
         write_atomic(
             delta,
-            os.path.join(deltas_dir, f"batch={key}"),
+            os.path.join(deltas_dir, f"batch={batch_id}"),
             output_format="parquet",
         )
         # tiny collect: the distinct DAYS this batch touched — the refresh
@@ -122,11 +117,8 @@ def stream_trending_load(
                 .partitionBy("part_day")
                 .parquet(trending_dir)
             )
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
-    writer = events.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(
+        events, guarded(table_name, ledger_path, _commit),
+        checkpoint_dir, trigger_available_now,
+    )
